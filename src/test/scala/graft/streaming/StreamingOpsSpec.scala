@@ -190,6 +190,85 @@ class StreamingOpsSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(streamed === batch)
     assert(streamed.nonEmpty)
+    // The transformWithState sessionizer shares the semantics and the oracle.
+    val tws = StreamingOps.streamingSessionizeTws(spark, Sf)
+      .collect().map(_.toSeq).toSet
+    assert(tws === batch, "transformWithState sessionizer diverged from batch")
+  }
+
+  /** Batch island twin of [[StreamingOps.streamingSessionWindow]]: the
+    * session_window boundary rule, where a successor exactly `gap` after
+    * its predecessor starts a new session (`>= gap`). */
+  private def sessionWindowBatch(gapMinutes: Int = 30): Set[Seq[Any]] = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.Exact.dsum
+    val gapUs = gapMinutes * 60L * 1000000L
+    val order = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
+    graft.Tables.events(spark, Sf)
+      .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
+      .withColumn("prev_us", lag(col("us"), 1).over(order))
+      .withColumn("new_session",
+        when(col("prev_us").isNull || col("us") - col("prev_us") >= gapUs, 1).otherwise(0))
+      .withColumn("sid", sum(col("new_session"))
+        .over(order.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy(col("user_id"), col("sid"))
+      .agg(min(col("us")).as("session_start_us"), max(col("us")).as("session_last_us"),
+        count(lit(1)).as("n_events"), min(col("event_id")).as("first_event_id"),
+        max(col("event_id")).as("last_event_id"), dsum(col("value"), 24, 6).as("sum_value"))
+      .drop("sid")
+      .collect().map(_.toSeq).toSet
+  }
+
+  test("native session_window sessionize (chunked feed) equals the batch island twin") {
+    val streamed = StreamingOps.streamingSessionWindow(spark, Sf)
+      .collect().map(_.toSeq).toSet
+    assert(streamed === sessionWindowBatch())
+    assert(streamed.nonEmpty)
+  }
+
+  test("stream-stream FULL OUTER join equals batch; the flush drains both null tails") {
+    import org.apache.spark.sql.functions._
+    def opt(r: org.apache.spark.sql.Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    def key(r: org.apache.spark.sql.Row) = (opt(r, 0), opt(r, 1), opt(r, 2))
+    val streamed = StreamingOps.streamingJoinFull(spark, Sf).collect().map(key)
+    val ev = graft.Tables.events(spark, Sf).withColumn("us", expr("ts div 1000"))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"), col("us").as("pus"))
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("cu"), col("us").as("cus"))
+    val batch = p.join(c, col("user_id") === col("cu") &&
+        col("cus") >= col("pus") - 3600000000L && col("cus") <= col("pus"), "full_outer")
+      .select(col("purchase_id"), coalesce(col("user_id"), col("cu")), col("click_id"))
+      .collect().map(key)
+    assert(streamed.sorted === batch.sorted)
+    // Both outer directions must fire: unmatched purchases (null click_id)
+    // and unmatched clicks (null purchase_id), as well as real matches.
+    assert(streamed.exists(_._3.isEmpty))
+    assert(streamed.exists(_._1.isEmpty))
+    assert(streamed.exists(t => t._1.nonEmpty && t._3.nonEmpty))
+  }
+
+  test("streaming transitions (transformWithState) equal the batch Markov matrix") {
+    val streamed = StreamingOps.streamingTransitions(spark, Sf)
+      .collect().map(_.toSeq).toSet
+    val batch = EventOps.transitions(spark, Sf).collect().map(_.toSeq).toSet
+    assert(streamed === batch)
+    assert(streamed.nonEmpty)
+  }
+
+  test("stream-static enrich join equals the batch purchase x customer x nation join") {
+    import org.apache.spark.sql.functions._
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.length }
+    val streamed = bag(StreamingOps.streamingEnrich(spark, Sf))
+    val batch = bag(graft.Tables.events(spark, Sf)
+      .filter(col("event_type") === "purchase")
+      .join(graft.Tables.customer(spark, Sf), col("user_id") === col("c_custkey"))
+      .join(graft.Tables.nation(spark, Sf), col("c_nationkey") === col("n_nationkey"))
+      .select(col("event_id"), col("user_id"), col("c_name"), col("n_name"), col("value")))
+    assert(streamed === batch)
+    assert(streamed.nonEmpty)
   }
 
   test("foreachBatch upsert: chunked-feed snapshot equals the batch latest-per-user") {
@@ -249,6 +328,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
       val native = StreamingOps.streamingSessionWindow(spark, Sf)
         .collect().map(_.toSeq).toSet
+      assert(native === sessionWindowBatch(), "session_window diverged under RocksDB")
       assert(native.nonEmpty, "session_window produced nothing under RocksDB")
 
       val dd = StreamingOps.streamingDedupWatermarked(spark, Sf)
