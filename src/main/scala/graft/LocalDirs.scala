@@ -31,17 +31,20 @@ object LocalDirs {
     * writes were pure fixed overhead on the bench's repeated passes. */
   lazy val feedCacheRoot: String = {
     val dir = s"$scratchRoot/graft-feed-cache/${java.util.UUID.randomUUID}"
-    val f = new java.io.File(dir)
-    f.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(x: java.io.File): Unit = {
-        // listFiles() returns null on IO error / concurrent deletion — a
-        // shutdown-hook NPE would abandon the rest of the cache tree.
-        if (x.isDirectory) Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-        x.delete(): Unit
-      }
-      rm(f)
-    }))
+    new java.io.File(dir).mkdirs()
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
     dir
+  }
+
+  /** Deletes `path` and everything under it; a missing path is a no-op.
+    * `listFiles()` returns null on IO error or when the directory vanishes
+    * mid-walk (a concurrent delete); that reads as empty, so one vanished
+    * entry never abandons the rest of the tree. */
+  def deleteTree(path: String): Unit = {
+    def rm(x: java.io.File): Unit = {
+      if (x.isDirectory) Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
+      x.delete(): Unit
+    }
+    rm(new java.io.File(path))
   }
 }

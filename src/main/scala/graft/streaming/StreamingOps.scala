@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StatefulProcessor, StreamingQuery}
+import scala.reflect.runtime.universe.TypeTag
 import graft.Tables
 import graft.operators.Exact._
 
@@ -23,37 +24,31 @@ import graft.operators.Exact._
   * though the operator under test is driver-free). MemoryStream appears
   * only in specs, where crafted/out-of-order micro-corpora need per-row
   * control.
+  *
+  * Run discipline: every memory-sink demo runs through ONE harness,
+  * [[drainToMemory]], which owns the session conf ([[withConf]]), the
+  * per-run checkpoint and feed dirs, the chunk-by-chunk drain with its
+  * sentinel flush, and the cleanup; the `foreachBatch` upsert keeps its own
+  * sink but shares the conf, drain and cleanup.
   */
 object StreamingOps {
 
 
-  /** Streaming state/offset checkpoints on fast scratch (tmpfs by default,
-    * GRAFT_LOCAL_DIR overrides — see [[graft.LocalDirs]]): state-store and
-    * offset-log fsyncs were the slowest part of the demo streams on this
-    * host's throttled disk. Unique per run — these are throwaway demo
+  /** Per-run scratch dir for a stream's checkpoint and staged feeds, on
+    * fast scratch (tmpfs by default, GRAFT_LOCAL_DIR overrides — see
+    * [[graft.LocalDirs]]): state-store and offset-log fsyncs were the
+    * slowest part of the demo streams on this host's throttled disk. Unique
+    * per run and deleted when the run stops — these are throwaway demo
     * checkpoints, not recovery points. */
   private def ckptDir(name: String): String = graft.LocalDirs.streamingCkpt(name)
 
   /** A staged chunk replay: `watchDir` is the directory the streaming file
     * source watches; `chunks(k)` are the staged parquet part-files of
     * time-chunk k, moved in by [[dropChunk]] one chunk per micro-batch;
-    * `baseDir` owns both and is deleted by [[cleanupFeed]] once the run's
-    * result is materialized. */
+    * `baseDir` owns both and lives under the run's scratch dir, which the
+    * harness ([[drainToMemory]]) deletes once the result is materialized. */
   private[streaming] case class ChunkFeed(baseDir: String, watchDir: String,
       chunks: IndexedSeq[Seq[java.io.File]], maxOrder: Option[Long])
-
-  /** Deletes a feed's staging + watch dirs. Every demo query drains into a
-    * memory sink (fully materialized before return), so the corpus copy in
-    * scratch is garbage the moment the stream stops — without this, a
-    * median-of-3 bench over the streaming surface accumulates one staged
-    * corpus per query per pass in /dev/shm. */
-  private def cleanupFeed(feeds: ChunkFeed*): Unit = feeds.foreach { f =>
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles().foreach(rm)
-      x.delete(): Unit
-    }
-    rm(new java.io.File(f.baseDir))
-  }
 
   /** Stages `df` as `numChunks` TIME-DISJOINT parquet chunk directories
     * under `baseDir/stage`, ready to be replayed into `baseDir/in` (the
@@ -107,7 +102,7 @@ object StreamingOps {
     * part-files into its own throwaway feed dirs (a metadata op). The
     * replay itself is untouched: per-run watch dirs stay unique (the file
     * source tracks seen paths), [[dropChunk]] renames only the per-run
-    * links, and [[cleanupFeed]] deletes only the per-run tree — the master
+    * links, and the harness deletes only the per-run tree — the master
     * under [[graft.LocalDirs.feedCacheRoot]] lives until JVM exit.
     * Callers' keys MUST determine the staged frame's content (table,
     * projection, filter, sfDir, chunking), which is what each call site's
@@ -189,16 +184,6 @@ object StreamingOps {
         java.nio.file.Paths.get(watchDir, s"$tag-${f.getName}"))
     }
 
-  /** Deletes a whole scratch tree (feeds + sentinel staging under one
-    * base) — the join demos' two feeds and sentinels share a parent. */
-  private def rmTree(path: String): Unit = {
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles().foreach(rm)
-      x.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
-
   /** Max event time across the given staged side(s) — read from the feeds'
     * own quantile pass (zero extra jobs), NULL-safely: an empty side has no
     * max ([[ChunkFeed.maxOrder]] = None; a testdata round with no clicks at
@@ -212,76 +197,111 @@ object StreamingOps {
     maxes.max
   }
 
-  /** Local-mode state-partition + checkpoint-IO tuning, not semantics:
-    * each micro-batch pays a fixed per-state-partition cost (store open/
-    * commit/snapshot — a stream-stream join commits FOUR stores per
-    * partition) and the demo keyspaces are small, so 4 state partitions
-    * beat the session default (32) and the previous 8 — measured on the
-    * sf0.1 join family; 2 over-serializes. Spark 4's checkpoint file CHECKSUMS
-    * (`ChecksumCheckpointFileManager`, twin .checksum file per delta/log
-    * write) are also disabled for the demos: these are throwaway
-    * unique-per-run checkpoints that are never restarted from, so
-    * bit-rot protection buys nothing and doubles the per-commit file
-    * count (measured: summed per-batch store commit time ~3-5 s across
-    * the 32 store instances of a join batch). Both settings are restored
-    * afterwards; a production run keeps checksums on its durable
-    * checkpoints and sizes partitions to its executors. */
-  /** State-partition count for the streaming demos. Round-9 A/B at sf0.1
-    * (15-query family, same window): parts=4 28.8 s, parts=2 29.9 s,
-    * parts=2 + RocksDB changelog checkpointing 29.8 s — neither candidate
-    * knob beats the default, so 4 stays; the env override remains for
-    * future A/B runs. */
-  private val StateParts = sys.env.getOrElse("GRAFT_STATE_PARTS", "4")
+  /** Session conf every demo stream runs under — local-mode tuning, not
+    * semantics; [[withConf]] restores the session's values afterwards.
+    *  - 4 state partitions: each micro-batch pays a fixed per-state-partition
+    *    cost (store open/commit/snapshot — a stream-stream join commits
+    *    every store per partition) and the demo keyspaces are small. Round-9
+    *    A/B at sf0.1 over the 15-query family: 4 parts 28.8 s, 2 parts
+    *    29.9 s, 2 parts + RocksDB changelog 29.8 s; the earlier 8 and the
+    *    session default (32) were slower too.
+    *  - checkpoint file checksums off: Spark 4's `ChecksumCheckpointFileManager`
+    *    writes a twin .checksum file per delta/log write, doubling the
+    *    per-commit file count (measured: summed per-batch store commit
+    *    ~3-5 s across the 32 store instances of a v2 join batch). These
+    *    checkpoints are never restarted from, so bit-rot protection buys
+    *    nothing.
+    * A production run keeps checksums on its durable checkpoints and sizes
+    * partitions to its executors. */
+  private val StateConf = Map(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
 
-  /** Stream-stream joins run with join state format VERSION 3 — one
-    * RocksDB store per partition with virtual column families — instead of
-    * the default v2's FOUR stores per partition per join (optimization
-    * round 14, VERDICT #1; guide §5 — the streaming family's floor is the
-    * per-batch store-commit fan-out, measured by StreamProbe at
-    * 0.51–0.75 s summed commit per micro-batch across the 16 v2 store
-    * instances of a 4-partition join, data or no data). v3 quarters the
-    * per-batch commit/load/maintenance instance count; it requires the
-    * RocksDB provider (the at-scale posture every tws demo already runs).
-    * Values are provider-independent — the oracle hash-checks all three
-    * join demos. GRAFT_JOIN_STORE_V2=1 restores the previous form for A/B.
-    */
-  private def withJoinStoreV3[A](spark: SparkSession)(body: => A): A =
-    if (sys.env.get("GRAFT_JOIN_STORE_V2").contains("1")) body
-    else {
-      val fmtKey = "spark.sql.streaming.join.stateFormatVersion"
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val prevFmt = spark.conf.getOption(fmtKey)
-      val prevProv = spark.conf.getOption(provKey)
-      val prevCl = spark.conf.getOption(clKey)
-      spark.conf.set(fmtKey, "3")
-      spark.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Changelog checkpointing: commit appends a changelog delta instead
-      // of zipping+uploading a full RocksDB snapshot per batch (snapshots
-      // move to the async maintenance thread) — the per-commit cost becomes
-      // O(changed keys), the production default posture for RocksDB state.
-      if (sys.env.get("GRAFT_JOIN_NO_CHANGELOG").isEmpty) spark.conf.set(clKey, "true")
-      try body finally {
-        prevFmt match { case Some(v) => spark.conf.set(fmtKey, v); case None => spark.conf.unset(fmtKey) }
-        prevProv match { case Some(v) => spark.conf.set(provKey, v); case None => spark.conf.unset(provKey) }
-        prevCl match { case Some(v) => spark.conf.set(clKey, v); case None => spark.conf.unset(clKey) }
-      }
-    }
+  /** [[StateConf]] on the RocksDB state store: `transformWithState` needs
+    * it (multiple column families for named state + timers), and it is the
+    * at-scale posture, so the tws demos exercise the PRODUCTION store on
+    * every correctness pass. */
+  private val RocksDbConf = StateConf + ("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-  private def withStateParts[A](spark: SparkSession)(body: => A): A = {
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevCk = spark.conf.getOption(ckKey)
-    spark.conf.set("spark.sql.shuffle.partitions", StateParts)
-    spark.conf.set(ckKey, "false")
-    try body finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevCk match {
-        case Some(v) => spark.conf.set(ckKey, v)
-        case None => spark.conf.unset(ckKey)
-      }
+  /** Stream-stream joins: join state format VERSION 3 — one RocksDB store
+    * per partition with virtual column families instead of v2's FOUR
+    * stores per partition per join — plus changelog checkpointing, where a
+    * commit appends a changelog delta instead of uploading a full RocksDB
+    * snapshot (snapshots move to the async maintenance thread), so the
+    * per-commit cost is O(changed keys). The per-batch store-commit fan-out
+    * is the join family's floor (optimization round 14): 0.51–0.75 s summed
+    * commit per micro-batch across the 16 v2 store instances of a
+    * 4-partition join, data or no data, against 0.15–0.18 s steady-state
+    * under v3 + changelog (`stream.state_commit_s` in a traced
+    * `perfbench/run.py --workload stream_queries` run shows the same
+    * breakdown). Values are provider-independent — the oracle hash-checks
+    * all three join demos. */
+  private val JoinConf = RocksDbConf ++ Map(
+    "spark.sql.streaming.join.stateFormatVersion" -> "3",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  /** Runs `body` with `conf` set on the session, then restores every key it
+    * touched — to its previous value, or unset if it had none. */
+  private def withConf[A](spark: SparkSession, conf: Map[String, String])(body: => A): A = {
+    val prev = conf.keys.toSeq.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** One demo run's stream: the query `out`, the chunk `feeds` it reads,
+    * and a `flush` hook (the sentinel drop) run with the last chunk. */
+  private case class Run(out: Dataset[_], feeds: Seq[ChunkFeed] = Nil,
+      flush: () => Unit = () => ())
+
+  /** The one memory-sink run harness every registered demo stream goes
+    * through. `plan` gets the run's scratch dir, stages its feeds and
+    * sentinels under it and returns the [[Run]]; the harness then, under
+    * `conf`, starts the memory sink `name` with its checkpoint in the same
+    * dir, replays the feeds ([[drain]]), stops the query and deletes the
+    * whole dir — feeds, sentinels and checkpoint — whether the run
+    * succeeded or threw. The memory-sink table is fully materialized by
+    * then, so nothing under the dir is read again. */
+  private def drainToMemory(spark: SparkSession, name: String, mode: String,
+      conf: Map[String, String])(plan: String => Run): DataFrame = {
+    val dir = ckptDir(name)
+    try {
+      val run = plan(dir)
+      withConf(spark, conf) {
+        val q = run.out.writeStream.outputMode(mode).format("memory").queryName(name)
+          .option("checkpointLocation", s"$dir/ckpt").start()
+        try drain(q, run.feeds, run.flush) finally q.stop()
+      }
+    } finally graft.LocalDirs.deleteTree(dir)
+    // The memory-sink table is session-scoped mutable state.
+    spark.table(name)
+  }
+
+  /** Replays `feeds` into `q`: per chunk k, drop chunk k of every feed,
+    * run `flush` with the last chunk (the pre-staged sentinels then land in
+    * the SAME listing — see [[stageSentinel]]), then drain. A run with no
+    * feeds (a source over fixed files) drains once. */
+  private def drain(q: StreamingQuery, feeds: Seq[ChunkFeed],
+      flush: () => Unit = () => ()): Unit = {
+    val n = feeds.headOption.fold(1)(_.chunks.length)
+    (0 until n).foreach { k =>
+      feeds.foreach(dropChunk(_, k))
+      if (k == n - 1) flush()
+      q.processAllAvailable()
+    }
+  }
+
+  /** Stages `df` as run `name`'s chunk feed under `dir` (cached per name,
+    * sfDir and chunking — the key determines the content) and opens the
+    * file-source stream over its watch dir. */
+  private def stageFeed(spark: SparkSession, name: String, sfDir: String, numChunks: Int,
+      dir: String, df: DataFrame, orderCol: String = "us"): (ChunkFeed, DataFrame) = {
+    val feed = stageTimeChunksCached(df, orderCol, numChunks, s"$dir/feed",
+      s"${name}_feed|$sfDir|$numChunks")
+    (feed, spark.readStream.schema(df.schema).parquet(feed.watchDir))
   }
 
   /** Hourly per-type counts/sums computed THROUGH the streaming engine:
@@ -304,14 +324,7 @@ object StreamingOps {
       // EventOps.hourEpochExpr for the pre-1970 parity rationale).
       .groupBy(expr(graft.operators.EventOps.hourEpochExpr).as("hour_epoch"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value"), 24, 6).as("sum_value"))
-    val name = "graft_stream_hourly"
-    withStateParts(spark) {
-      val q = agg.writeStream.outputMode("complete").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    // Materialize: the memory-sink table is session-scoped mutable state.
-    spark.table(name)
+    drainToMemory(spark, "graft_stream_hourly", "complete", StateConf)(_ => Run(agg))
   }
 
   case class Ev(user_id: Long, event_id: Long, us: Long, value: Double)
@@ -407,52 +420,46 @@ object StreamingOps {
       }
   }
 
-  /** Gap-based sessionization through the streaming engine, fed as
-    * TIME-SPLIT parquet chunk drops through a file source (no driver-side
-    * rows — see the object doc), plus one far-future watermark-advancing
-    * sentinel row so every session (including each user's last) is emitted
-    * by the event-time-timeout path — the oracle then checks the
-    * production operator at full strength. */
-  def streamingSessionize(spark: SparkSession, sfDir: String, gapMinutes: Int = 30,
-      numChunks: Int = 2): DataFrame = {
+  /** The chunk feed + sentinel run the three sessionizers share: events
+    * replay as TIME-SPLIT parquet chunk drops through a file source (no
+    * driver-side rows — see the object doc), and one far-future,
+    * watermark-advancing sentinel row `sentGaps` gaps past the data closes
+    * every real session, each user's last included. The sentinel is one
+    * literal row (driver-built by construction, not a corpus collect),
+    * pre-staged before the stream starts and folded into the LAST chunk
+    * drop — see [[stageSentinel]] for why this costs one fewer micro-batch.
+    * Its own session stays open or is filtered out below.
+    *
+    * Sentinel discrimination is by the event_id = -1 MARKER the feeder
+    * set, never by user_id sign: negative/NULL user ids are legal data the
+    * quality gate contemplates, so a sign filter would silently drop real
+    * rows under generator drift (ADVICE r6). A real session can't consist
+    * solely of the marker id — only the sentinel's own session matches. */
+  private def sessionRun(spark: SparkSession, sfDir: String, numChunks: Int,
+      gapMinutes: Int, name: String, sentKey: String, sentGaps: Long,
+      conf: Map[String, String])(sessions: DataFrame => Dataset[_]): DataFrame = {
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
     val evs = Tables.events(spark, sfDir)
       .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    val feed = stageTimeChunksCached(evs, "us", numChunks,
-      ckptDir("graft_stream_sessionize_feed"), s"graft_stream_sessionize_feed|$sfDir|$numChunks")
-    val maxUs = maxUsOrFail("streamingSessionize", feed)
-    val stream = spark.readStream.schema(evs.schema).parquet(feed.watchDir).as[Ev]
-    val sessions = sessionizeStream(stream, gapUs)
-    val name = "graft_stream_sessionize"
-    // Sentinel: one literal row (driver-built by construction, not a
-    // corpus collect) whose far-future timestamp pushes the watermark
-    // past every real session's gap edge, firing the timeouts. Its own
-    // (marker-id) session stays open and is filtered out below. Pre-staged
-    // before the stream starts and folded into the LAST chunk drop — see
-    // [[stageSentinel]] for why this costs one fewer micro-batch.
-    val sent = stageSentinelCached(Seq(Ev(-1L, -1L, maxUs + 1000L * gapUs, 0.0)).toDS().toDF(),
-      s"${feed.baseDir}/sentinel", s"sessionize-sent|$sfDir|$gapMinutes")
-    // try/finally: a failed run must still reclaim the staged corpus copy
-    // (tmpfs scratch) — the memory-sink table is complete or irrelevant.
-    try withStateParts(spark) {
-      val q = sessions.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k =>
-          dropChunk(feed, k)
-          if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
-    // Sentinel discrimination by the event_id = -1 MARKER the feeder set,
-    // never by user_id sign: negative/NULL user ids are legal data the
-    // quality gate contemplates, so a sign filter would silently drop real
-    // rows under generator drift (ADVICE r6). A real session can't consist
-    // solely of the marker id — only the sentinel's own session matches.
-    spark.table(name)
-      .filter(!(col("first_event_id") === -1L && col("last_event_id") === -1L))
+    drainToMemory(spark, name, "append", conf) { dir =>
+      val (feed, stream) = stageFeed(spark, name, sfDir, numChunks, dir, evs)
+      val maxUs = maxUsOrFail(name, feed)
+      val sent = stageSentinelCached(Seq(Ev(-1L, -1L, maxUs + sentGaps * gapUs, 0.0)).toDS().toDF(),
+        s"$dir/sentinel", s"$sentKey|$sfDir|$gapMinutes")
+      Run(sessions(stream), Seq(feed), () => dropFiles(feed.watchDir, "sentinel", sent))
+    }.filter(!(col("first_event_id") === -1L && col("last_event_id") === -1L))
+  }
+
+  /** Gap-based sessionization through the streaming engine ([[sessionRun]]'s
+    * chunk feed + sentinel), so every session is emitted by the
+    * event-time-timeout path — the oracle then checks the production
+    * operator at full strength. */
+  def streamingSessionize(spark: SparkSession, sfDir: String, gapMinutes: Int = 30,
+      numChunks: Int = 2): DataFrame = {
+    import spark.implicits._
+    sessionRun(spark, sfDir, numChunks, gapMinutes, "graft_stream_sessionize",
+      "sessionize-sent", 1000L, StateConf)(s => sessionizeStream(s.as[Ev], gapMinutes * 60L * 1000000L))
   }
 
   /** Gap-based sessionization via Spark's NATIVE `session_window`
@@ -471,18 +478,14 @@ object StreamingOps {
     * Output keeps epoch integers: `session_start_us` = window start (first
     * event), `session_last_us` = window end − gap (last event — exact
     * integer arithmetic, since a merged session window always ends at
-    * last-event-time + gap). Same chunk feed + far-future sentinel pattern
-    * as [[streamingSessionize]]. */
+    * last-event-time + gap). Same chunk feed + far-future sentinel run
+    * ([[sessionRun]]); the sentinel sits 2000 gaps out, past every real
+    * session's end, so append mode emits them all. */
   def streamingSessionWindow(spark: SparkSession, sfDir: String, gapMinutes: Int = 30,
       numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    val evs = Tables.events(spark, sfDir)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    val feed = stageTimeChunksCached(evs, "us", numChunks,
-      ckptDir("graft_stream_session_native_feed"), s"graft_stream_session_native_feed|$sfDir|$numChunks")
-    val maxUs = maxUsOrFail("streamingSessionWindow", feed)
-    val sessions = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
+    sessionRun(spark, sfDir, numChunks, gapMinutes, "graft_stream_session_native",
+      "swin-sent", 2000L, StateConf)(_
       .withColumn("event_time", timestamp_micros(col("us")))
       .withWatermark("event_time", "0 seconds")
       .groupBy(session_window(col("event_time"), s"$gapMinutes minutes"), col("user_id"))
@@ -491,28 +494,7 @@ object StreamingOps {
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("session_start_us"),
         (unix_micros(col("session_window.end")) - gapUs).as("session_last_us"),
-        col("n_events"), col("first_event_id"), col("last_event_id"), col("sum_value"))
-    val name = "graft_stream_session_native"
-    // Far-future sentinel (same pattern as streamingSessionize): advances
-    // the watermark past every real session's end so append mode emits
-    // them all; its own session is filtered out below. Pre-staged, folded
-    // into the last chunk drop ([[stageSentinel]]).
-    val sent = stageSentinelCached(Seq(Ev(-1L, -1L, maxUs + 2000L * gapUs, 0.0)).toDS().toDF(),
-      s"${feed.baseDir}/sentinel", s"swin-sent|$sfDir|$gapMinutes")
-    try withStateParts(spark) {
-      val q = sessions.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k =>
-          dropChunk(feed, k)
-          if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
-    // Marker-based sentinel filter — see [[streamingSessionize]]'s note.
-    spark.table(name)
-      .filter(!(col("first_event_id") === -1L && col("last_event_id") === -1L))
+        col("n_events"), col("first_event_id"), col("last_event_id"), col("sum_value")))
   }
 
   /** Gap sessionization as a [[org.apache.spark.sql.streaming.StatefulProcessor]]
@@ -586,54 +568,22 @@ object StreamingOps {
   }
 
   /** [[GapSessionProcessor]] through the engine: same chunk feed + sentinel
-    * pattern as [[streamingSessionize]]. `transformWithState` requires the
-    * RocksDB state store (multiple column families for named state +
-    * timers), so this demo pins the provider for its run — which also
-    * makes it the registered query that exercises the PRODUCTION store on
-    * every correctness pass. */
+    * run as [[streamingSessionize]] ([[sessionRun]]). `transformWithState`
+    * requires the RocksDB state store, so this demo runs under
+    * [[RocksDbConf]] — which also makes it the registered query that
+    * exercises the PRODUCTION store on every correctness pass. */
   def streamingSessionizeTws(spark: SparkSession, sfDir: String, gapMinutes: Int = 30,
       numChunks: Int = 2): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val gapUs = gapMinutes * 60L * 1000000L
-    val evs = Tables.events(spark, sfDir)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val name = "graft_stream_session_tws"
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks,
-        ckptDir("graft_stream_session_tws_feed"), s"graft_stream_session_tws_feed|$sfDir|$numChunks")
-      try {
-        val maxUs = maxUsOrFail("streamingSessionizeTws", feed)
-        val sessions = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .withColumn("event_time", timestamp_micros(col("us")))
-          .withWatermark("event_time", "0 seconds")
-          .as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new GapSessionProcessor(gapUs),
-            TimeMode.EventTime(), OutputMode.Append())
-        // Pre-staged sentinel, folded into the last chunk ([[stageSentinel]]).
-        val sent = stageSentinelCached(Seq(Ev(-1L, -1L, maxUs + 1000L * gapUs, 0.0)).toDS().toDF(),
-          s"${feed.baseDir}/sentinel", s"tws-sent|$sfDir|$gapMinutes")
-        withStateParts(spark) {
-          val q = sessions.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try {
-            (0 until numChunks).foreach { k =>
-              dropChunk(feed, k)
-              if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
-    // Marker-based sentinel filter — see [[streamingSessionize]]'s note.
-    spark.table(name)
-      .filter(!(col("first_event_id") === -1L && col("last_event_id") === -1L))
+    sessionRun(spark, sfDir, numChunks, gapMinutes, "graft_stream_session_tws",
+      "tws-sent", 1000L, RocksDbConf)(_
+      .withColumn("event_time", timestamp_micros(col("us")))
+      .withWatermark("event_time", "0 seconds")
+      .as[Ev]
+      .groupByKey(_.user_id)
+      .transformWithState(new GapSessionProcessor(gapMinutes * 60L * 1000000L),
+        TimeMode.EventTime(), OutputMode.Append()))
   }
 
   /** Island oracle with the session-window boundary rule (`>= gap` starts a
@@ -706,36 +656,22 @@ object StreamingOps {
     import org.apache.spark.sql.expressions.Window
     val evs = Tables.events(spark, sfDir)
       .selectExpr("user_id", "event_id", "ts div 1000 AS us", "event_type")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val name = "graft_stream_transitions"
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks,
-        ckptDir("graft_stream_transitions_feed"), s"graft_stream_transitions_feed|$sfDir|$numChunks")
-      try {
-        val steps = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .as[TEv]
-          .groupByKey(_.user_id)
-          .transformWithState(new TransitionProcessor, TimeMode.None(), OutputMode.Append())
-        withStateParts(spark) {
-          val q = steps.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-          finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
-    spark.table(name)
-      .groupBy(col("prev_type"), col("next_type"))
+    drainToMemory(spark, name, "append", RocksDbConf) { dir =>
+      val (feed, stream) = stageFeed(spark, name, sfDir, numChunks, dir, evs)
+      Run(stream.as[TEv].groupByKey(_.user_id)
+        .transformWithState(new TransitionProcessor, TimeMode.None(), OutputMode.Append()),
+        Seq(feed))
+    }.groupBy(col("prev_type"), col("next_type"))
       .agg(count(lit(1)).as("n"))
       .withColumn("t", sum(col("n")).over(Window.partitionBy()))
       .select(col("prev_type"), col("next_type"), col("n"),
         expr("n * 1000000 div t").as("share_ppm"))
   }
 
-  case class KEv(win_us: Long, h: Long, us: Long)
+  /** A sketch stream's input row, keyed by its 1-hour window start. */
+  trait WindowedEv { def win_us: Long }
+  case class KEv(win_us: Long, h: Long, us: Long) extends WindowedEv
   case class KmvSt(hs: Array[Long])
   case class KmvRow(win_us: Long, n_sketch: Long, kmv_estimate: Long)
 
@@ -793,6 +729,41 @@ object StreamingOps {
 
   private val WinUs = 3600000000L // 1-hour tumbling windows, µs
 
+  /** The windowed-sketch run the KMV, HLL and CMS streams share: `evs`
+    * (one row per event, with `win_us` and `us`) replays as a chunk feed,
+    * keyed by window into `processor` under the RocksDB provider, and
+    * windows close on WATERMARK ADVANCEMENT — a far-future sentinel row
+    * (`sentinel(window start, us)`) two windows past the data, folded into
+    * the last chunk, pushes the watermark past every real window end,
+    * firing all timers in the final no-data micro-batch (same flush
+    * discipline as the outer joins). The sentinel's OWN window end stays
+    * above the watermark it sets, so it never emits; the structural filter
+    * on its window START (beyond every real event by construction, no
+    * marker-column dependence) is belt-and-braces against a future
+    * flush-discipline change. */
+  private def windowSketch[T <: Product with WindowedEv : TypeTag, R <: Product : TypeTag](
+      spark: SparkSession, sfDir: String, numChunks: Int, tag: String, evs: DataFrame,
+      processor: StatefulProcessor[Long, T, R])(sentinel: (Long, Long) => T): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    val name = s"graft_stream_$tag"
+    var sentWin = Long.MaxValue // sentinel window start, set once staged
+    val out = drainToMemory(spark, name, "append", RocksDbConf) { dir =>
+      val (feed, stream) = stageFeed(spark, name, sfDir, numChunks, dir, evs)
+      sentWin = (maxUsOrFail(name, feed) / WinUs + 2L) * WinUs
+      val sent = stageSentinelCached(Seq(sentinel(sentWin, sentWin)).toDS().toDF(),
+        s"$dir/sentinel", s"$tag-sent|$sfDir")
+      Run(stream
+        .withColumn("event_time", timestamp_micros(col("us")))
+        .withWatermark("event_time", "0 seconds")
+        .as[T]
+        .groupByKey(_.win_us)
+        .transformWithState(processor, TimeMode.EventTime(), OutputMode.Append()),
+        Seq(feed), () => dropFiles(feed.watchDir, "sentinel", sent))
+    }
+    out.filter(col("win_us") < lit(sentWin))
+  }
+
   /** Streaming DISTINCT-USERS-PER-HOUR via a KMV sketch — the continuous
     * twin of [[graft.operators.TextAnalysis.distinctKmv]] and the third
     * `transformWithState` operator, showing the shape the other two don't:
@@ -804,11 +775,8 @@ object StreamingOps {
     * distinct hashes (TextAnalysis.scala KMV scaladoc) the streaming
     * output is bit-comparable against a batch DuckDB oracle — a property
     * HLL's float harmonic mean lacked until [[streamingHll]]'s fixed-point
-    * integer spelling. Windows close on WATERMARK ADVANCEMENT:
-    * the far-future sentinel folded into the last chunk pushes the
-    * watermark past every real window end, firing all timers in the final
-    * no-data micro-batch (same flush discipline as the outer joins).
-    * Runs under the RocksDB provider like every tws path.
+    * integer spelling. Windows close on watermark advancement
+    * ([[windowSketch]]).
     *
     * At 100 TB the plan holds: the keyed shuffle ships (window, hash)
     * pairs — the same volume any windowed count pays — and per-window
@@ -816,8 +784,6 @@ object StreamingOps {
     * windows are a fan-in concern for the batch-side `distinct` that
     * Spark's partial aggregation already bounds. */
   def streamingKmv(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.operators.{Hashing, TextAnalysis}
     val evs = Tables.events(spark, sfDir)
       .filter(col("user_id").isNotNull)
@@ -825,52 +791,11 @@ object StreamingOps {
         expr(s"(ts div 1000) div $WinUs * $WinUs").as("win_us"),
         Hashing.md5Long(col("user_id").cast("string")).as("h"),
         expr("ts div 1000").as("us"))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val name = "graft_stream_kmv"
-    var sentWin = Long.MaxValue // sentinel window start, set once staged
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks, ckptDir("graft_stream_kmv_feed"), s"graft_stream_kmv_feed|$sfDir|$numChunks")
-      try {
-        val maxUs = maxUsOrFail("streamingKmv", feed)
-        val sketches = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .withColumn("event_time", timestamp_micros(col("us")))
-          .withWatermark("event_time", "0 seconds")
-          .as[KEv]
-          .groupByKey(_.win_us)
-          .transformWithState(
-            new KmvWindowProcessor(TextAnalysis.KmvK, TextAnalysis.KmvNumerator),
-            TimeMode.EventTime(), OutputMode.Append())
-        // Sentinel two windows past the data: its OWN window's end stays
-        // above the watermark it sets, so it never emits; every real
-        // window's end falls below it, so every real timer fires.
-        val sentUs = (maxUs / WinUs + 2L) * WinUs
-        sentWin = sentUs / WinUs * WinUs
-        val sent = stageSentinelCached(Seq(KEv(sentWin, -1L, sentUs)).toDS().toDF(),
-          s"${feed.baseDir}/sentinel", s"kmv-sent|$sfDir")
-        withStateParts(spark) {
-          val q = sketches.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try {
-            (0 until numChunks).foreach { k =>
-              dropChunk(feed, k)
-              if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
-    // Structural sentinel filter: the sentinel's window START is beyond
-    // every real event by construction (no marker-column dependence). Its
-    // timer never fires anyway (own window end > the watermark it sets) —
-    // this is belt-and-braces against a future flush-discipline change.
-    spark.table(name).filter(col("win_us") < lit(sentWin))
+    windowSketch(spark, sfDir, numChunks, "kmv", evs,
+      new KmvWindowProcessor(TextAnalysis.KmvK, TextAnalysis.KmvNumerator))(KEv(_, -1L, _))
   }
 
-  case class HllEv(win_us: Long, bucket: Long, rho: Long, us: Long)
+  case class HllEv(win_us: Long, bucket: Long, rho: Long, us: Long) extends WindowedEv
   case class HllSt(regs: Array[Long])
   case class HllRow(win_us: Long, n_used: Long, hll_est: Long)
 
@@ -937,13 +862,11 @@ object StreamingOps {
   /** Streaming DISTINCT-EVENT-IDS-PER-HOUR via HLL registers — the
     * ingest-health monitor (estimated distinct ids vs raw row count
     * exposes duplicate floods without per-id state): [[HllWindowProcessor]]
-    * over 1-hour tumbling windows, same chunked replay + far-future
-    * sentinel + RocksDB provider discipline as [[streamingKmv]]. At 100 TB
+    * over 1-hour tumbling windows, run as a [[windowSketch]] like
+    * [[streamingKmv]]. At 100 TB
     * the keyed shuffle ships (window, bucket, rho) triples and per-window
     * state is 512 longs regardless of id volume. */
   def streamingHll(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.operators.{Hashing, TextAnalysis}
     val m = TextAnalysis.HllM
     val evs = Tables.events(spark, sfDir)
@@ -958,42 +881,8 @@ object StreamingOps {
         expr(s"CASE WHEN x = 0 THEN ${TextAnalysis.HllRhoMax} ELSE least(bit_count((x & (-x)) - 1) + 1, ${TextAnalysis.HllRhoMax}) END")
           .cast("long").as("rho"),
         col("us"))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val name = "graft_stream_hll"
-    var sentWin = Long.MaxValue
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks, ckptDir("graft_stream_hll_feed"), s"graft_stream_hll_feed|$sfDir|$numChunks")
-      try {
-        val maxUs = maxUsOrFail("streamingHll", feed)
-        val sketches = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .withColumn("event_time", timestamp_micros(col("us")))
-          .withWatermark("event_time", "0 seconds")
-          .as[HllEv]
-          .groupByKey(_.win_us)
-          .transformWithState(
-            new HllWindowProcessor(m.toInt, TextAnalysis.HllNumerator),
-            TimeMode.EventTime(), OutputMode.Append())
-        val sentUs = (maxUs / WinUs + 2L) * WinUs
-        sentWin = sentUs / WinUs * WinUs
-        val sent = stageSentinelCached(Seq(HllEv(sentWin, 0L, 1L, sentUs)).toDS().toDF(),
-          s"${feed.baseDir}/sentinel", s"hll-sent|$sfDir")
-        withStateParts(spark) {
-          val q = sketches.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try {
-            (0 until numChunks).foreach { k =>
-              dropChunk(feed, k)
-              if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
-    spark.table(name).filter(col("win_us") < lit(sentWin))
+    windowSketch(spark, sfDir, numChunks, "hll", evs,
+      new HllWindowProcessor(m.toInt, TextAnalysis.HllNumerator))(HllEv(_, 0L, 1L, _))
   }
 
   /** Batch oracle for [[streamingHll]]: identical register math per
@@ -1018,6 +907,7 @@ object StreamingOps {
   }
 
   case class CmsEv(win_us: Long, b0: Long, b1: Long, b2: Long, b3: Long, us: Long)
+      extends WindowedEv
   case class CmsState(cs: Array[Long])
   case class CmsProbeRow(win_us: Long, user_id: Long, cms_est: Long)
 
@@ -1090,11 +980,9 @@ object StreamingOps {
     * deterministic: md5-derived buckets (computed in the codegen'd scan
     * projection, not in the state store), integer counters, and a min
     * over depth cells per probe — so the streaming result hash-matches
-    * the batch DuckDB oracle cell-for-cell. Same fixed-timer /
-    * sentinel-flush / RocksDB discipline as the KMV window. */
+    * the batch DuckDB oracle cell-for-cell. Same fixed-timer
+    * [[windowSketch]] run as the KMV window. */
   def streamingCms(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.operators.{Hashing, TextAnalysis}
     val depth = TextAnalysis.CmsDepth
     val width = TextAnalysis.CmsWidth
@@ -1111,42 +999,8 @@ object StreamingOps {
     val probes = CmsProbeUsers.map { u =>
       u -> Array.tabulate(depth)(d => (Hashing.md5LongJvm(s"$d:$u") % width).toInt)
     }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val name = "graft_stream_cms"
-    var sentWin = Long.MaxValue
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks, ckptDir("graft_stream_cms_feed"), s"graft_stream_cms_feed|$sfDir|$numChunks")
-      try {
-        val maxUs = maxUsOrFail("streamingCms", feed)
-        val rows = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .withColumn("event_time", timestamp_micros(col("us")))
-          .withWatermark("event_time", "0 seconds")
-          .as[CmsEv]
-          .groupByKey(_.win_us)
-          .transformWithState(new CmsWindowProcessor(depth, width, probes),
-            TimeMode.EventTime(), OutputMode.Append())
-        val sentUs = (maxUs / WinUs + 2L) * WinUs
-        sentWin = sentUs / WinUs * WinUs
-        val sent = stageSentinelCached(
-          Seq(CmsEv(sentWin, 0L, 0L, 0L, 0L, sentUs)).toDS().toDF(),
-          s"${feed.baseDir}/sentinel", s"cms-sent|$sfDir")
-        withStateParts(spark) {
-          val q = rows.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try {
-            (0 until numChunks).foreach { k =>
-              dropChunk(feed, k)
-              if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
-    spark.table(name).filter(col("win_us") < lit(sentWin))
+    windowSketch(spark, sfDir, numChunks, "cms", evs,
+      new CmsWindowProcessor(depth, width, probes))(CmsEv(_, 0L, 0L, 0L, 0L, _))
   }
 
   /** Batch oracle for [[streamingCms]]: per-window sketch cells from the
@@ -1196,6 +1050,70 @@ object StreamingOps {
 
   case class Doc(doc_id: Long, text: String)
 
+  /** The click/purchase stream-stream interval join all three join demos
+    * run: each purchase pairs with the same user's clicks from the
+    * preceding hour, `joinType` is "inner", "leftOuter" or "fullOuter".
+    * Each side replays its own time-split chunk feed (two file sources, two
+    * watch dirs) under [[JoinConf]].
+    *
+    * The outer types fold ONE pre-staged sentinel row per side ([[stageSentinel]];
+    * negative user_ids, event_id = -1 marker, event times beyond the corpus
+    * + join range) into the final chunk drop, so chunk + flush share one
+    * micro-batch listing; either side may legitimately be empty (a round
+    * with no clicks), only both-empty aborts ([[maxUsOrFail]], read from
+    * the feeds' staging pass — no extra jobs). Sentinels surface only as
+    * unmatched outer rows carrying the marker in their surviving side's id
+    * column (their far-future event times sit beyond every real join
+    * window, so they never MATCH a real row; the click sentinel of a left
+    * outer join is inner-side and never emits at all). Filtering on the
+    * marker — not the user_id sign — keeps real negative/NULL-user rows
+    * and NULL-keyed outer rows, exactly what the oracles keep (ADVICE r6).
+    * user_id is the purchase side's, or for a full outer join the COALESCE
+    * of both key columns — for a match either side supplies it, for an
+    * outer row the surviving side does. */
+  private def clickPurchaseJoin(spark: SparkSession, sfDir: String, numChunks: Int,
+      tag: String, joinType: String): DataFrame = {
+    import spark.implicits._
+    def side(tpe: String) = Tables.events(spark, sfDir)
+      .filter(col("event_type") === tpe)
+      .selectExpr("user_id", "event_id", "ts div 1000 AS us")
+    val clickDf = side("click")
+    val purchDf = side("purchase")
+    val name = s"graft_stream_$tag"
+    val out = drainToMemory(spark, name, "append", JoinConf) { dir =>
+      val cFeed = stageTimeChunksCached(clickDf, "us", numChunks, s"$dir/clicks", s"$tag-clicks|$sfDir|$numChunks")
+      val pFeed = stageTimeChunksCached(purchDf, "us", numChunks, s"$dir/purchases", s"$tag-purchases|$sfDir|$numChunks")
+      val flush = if (joinType == "inner") () => () else {
+        val maxUs = maxUsOrFail(name, cFeed, pFeed)
+        def sentinel(userId: Long, to: String) = stageSentinelCached(
+          Seq((userId, -1L, maxUs + 2L * 3600L * 1000000L)).toDF("user_id", "event_id", "us"), to,
+          s"$tag-sent|$sfDir|$userId")
+        val cSent = sentinel(-1L, s"$dir/sent_c")
+        val pSent = sentinel(-2L, s"$dir/sent_p")
+        () => {
+          dropFiles(cFeed.watchDir, "sentinel", cSent)
+          dropFiles(pFeed.watchDir, "sentinel", pSent)
+        }
+      }
+      val clicks = spark.readStream.schema(clickDf.schema).parquet(cFeed.watchDir)
+        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
+          timestamp_micros(col("us")).as("c_time"))
+        .withWatermark("c_time", "0 seconds")
+      val purchases = spark.readStream.schema(purchDf.schema).parquet(pFeed.watchDir)
+        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+          timestamp_micros(col("us")).as("p_time"))
+        .withWatermark("p_time", "0 seconds")
+      val user = if (joinType == "fullOuter") coalesce(col("p_user"), col("c_user")) else col("p_user")
+      Run(purchases.join(clicks, expr(
+          "p_user = c_user AND c_time >= p_time - INTERVAL 1 HOUR AND c_time <= p_time"), joinType)
+        .select(col("purchase_id"), user.as("user_id"), col("click_id")),
+        Seq(cFeed, pFeed), flush)
+    }
+    if (joinType == "inner") out
+    else out.filter(coalesce(col("purchase_id"), lit(0L)) =!= -1L &&
+      coalesce(col("click_id"), lit(0L)) =!= -1L)
+  }
+
   /** Watermarked STREAM-STREAM interval join: clicks and purchases arrive
     * on separate streams; each purchase joins the same user's clicks from
     * the preceding hour. Inner stream-stream joins emit a pair as soon as
@@ -1213,39 +1131,8 @@ object StreamingOps {
     * DuckDB interval-join oracle therefore checks this path
     * value-for-value. */
   def streamingIntervalJoin(spark: SparkSession, sfDir: String,
-      numChunks: Int = 2): DataFrame = {
-    def side(tpe: String) = Tables.events(spark, sfDir)
-      .filter(col("event_type") === tpe)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us")
-    val clickDf = side("click")
-    val purchDf = side("purchase")
-    val base = ckptDir("graft_stream_ivjoin_feed")
-    val cFeed = stageTimeChunksCached(clickDf, "us", numChunks, s"$base/clicks", s"ivjoin-clicks|$sfDir|$numChunks")
-    val pFeed = stageTimeChunksCached(purchDf, "us", numChunks, s"$base/purchases", s"ivjoin-purchases|$sfDir|$numChunks")
-    val clicks = spark.readStream.schema(clickDf.schema).parquet(cFeed.watchDir)
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        timestamp_micros(col("us")).as("c_time"))
-      .withWatermark("c_time", "0 seconds")
-    val purchases = spark.readStream.schema(purchDf.schema).parquet(pFeed.watchDir)
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        timestamp_micros(col("us")).as("p_time"))
-      .withWatermark("p_time", "0 seconds")
-    val joined = purchases.join(clicks, expr(
-      "p_user = c_user AND c_time >= p_time - INTERVAL 1 HOUR AND c_time <= p_time"))
-      .select(col("purchase_id"), col("p_user").as("user_id"), col("click_id"))
-    val name = "graft_stream_ivjoin"
-    try withJoinStoreV3(spark) { withStateParts(spark) {
-      val q = joined.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k =>
-          dropChunk(cFeed, k); dropChunk(pFeed, k)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } } finally cleanupFeed(cFeed, pFeed)
-    spark.table(name)
-  }
+      numChunks: Int = 2): DataFrame =
+    clickPurchaseJoin(spark, sfDir, numChunks, "ivjoin", "inner")
 
   /** Watermarked stream-stream LEFT OUTER interval join — the fourth
     * streaming join family: every purchase emits, with click_id = NULL
@@ -1267,72 +1154,14 @@ object StreamingOps {
     * evicts-and-emits the real tail — no extra data rounds, so the flush
     * costs one state-store commit cycle instead of the two full
     * sentinel-drop rounds this demo used previously. Sentinels are
-    * filtered from the result; whether the sentinels' OWN unmatched rows
-    * surface depends on trailing no-data batches, so nothing observable
-    * depends on them. This is exactly the "advance the watermark to drain
-    * outer state" discipline a production pipeline applies when draining
-    * a topic before decommission. */
+    * filtered from the result ([[clickPurchaseJoin]]); whether the
+    * sentinels' OWN unmatched rows surface depends on trailing no-data
+    * batches, so nothing observable depends on them. This is exactly the
+    * "advance the watermark to drain outer state" discipline a production
+    * pipeline applies when draining a topic before decommission. */
   def streamingJoinOuter(spark: SparkSession, sfDir: String,
-      numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    def side(tpe: String) = Tables.events(spark, sfDir)
-      .filter(col("event_type") === tpe)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us")
-    val clickDf = side("click")
-    val purchDf = side("purchase")
-    val base = ckptDir("graft_stream_lojoin_feed")
-    val cFeed = stageTimeChunksCached(clickDf, "us", numChunks, s"$base/clicks", s"lojoin-clicks|$sfDir|$numChunks")
-    val pFeed = stageTimeChunksCached(purchDf, "us", numChunks, s"$base/purchases", s"lojoin-purchases|$sfDir|$numChunks")
-    val name = "graft_stream_lojoin"
-    // try/finally: the staged corpus copies are garbage whether the run
-    // succeeded or threw — without it, a failed run leaks them into /dev/shm.
-    try {
-      // NULL-safe per side: either side may legitimately be empty (a round
-      // with no clicks); only both-empty aborts. Read from the feeds'
-      // staging pass — no extra jobs.
-      val maxUs = maxUsOrFail("streamingJoinOuter", cFeed, pFeed)
-      val hourUs = 3600L * 1000000L
-      // Pre-staged per-side sentinels ([[stageSentinel]]): renamed in with
-      // the last chunk so chunk + flush share ONE micro-batch listing.
-      def sentinel(userId: Long, dir: String) = stageSentinelCached(
-        Seq((userId, -1L, maxUs + 2L * hourUs)).toDF("user_id", "event_id", "us"), dir,
-        s"lojoin-sent|$sfDir|$userId")
-      val cSent = sentinel(-1L, s"$base/sent_c")
-      val pSent = sentinel(-2L, s"$base/sent_p")
-      val clicks = spark.readStream.schema(clickDf.schema).parquet(cFeed.watchDir)
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          timestamp_micros(col("us")).as("c_time"))
-        .withWatermark("c_time", "0 seconds")
-      val purchases = spark.readStream.schema(purchDf.schema).parquet(pFeed.watchDir)
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          timestamp_micros(col("us")).as("p_time"))
-        .withWatermark("p_time", "0 seconds")
-      val joined = purchases.join(clicks, expr(
-          "p_user = c_user AND c_time >= p_time - INTERVAL 1 HOUR AND c_time <= p_time"),
-          "leftOuter")
-        .select(col("purchase_id"), col("p_user").as("user_id"), col("click_id"))
-      withJoinStoreV3(spark) { withStateParts(spark) {
-        val q = joined.writeStream.outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckptDir(name)).start()
-        try {
-          (0 until numChunks).foreach { k =>
-            dropChunk(cFeed, k); dropChunk(pFeed, k)
-            if (k == numChunks - 1) { // fold the watermark flush into the last batch
-              dropFiles(cFeed.watchDir, "sentinel", cSent)
-              dropFiles(pFeed.watchDir, "sentinel", pSent)
-            }
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } }
-    } finally rmTree(base) // feeds + sentinel staging share the base dir
-    // The purchase-side sentinel surfaces as an unmatched row whose
-    // purchase_id IS the event_id = -1 marker the feeder wrote; the click
-    // sentinel is inner-side and never emits. Discriminating on the marker
-    // (never the user_id sign) keeps real negative/NULL-user purchases —
-    // the drift case the quality gate contemplates (ADVICE r6).
-    spark.table(name).filter(col("purchase_id") =!= -1L)
-  }
+      numChunks: Int = 2): DataFrame =
+    clickPurchaseJoin(spark, sfDir, numChunks, "lojoin", "leftOuter")
 
   val streamingJoinOuterSql: String =
     """SELECT p.purchase_id, p.user_id, c.click_id
@@ -1355,68 +1184,8 @@ object StreamingOps {
     * outer row the surviving side does; sentinel rows are discriminated by
     * the event_id = -1 marker they carry, never by the user_id sign. */
   def streamingJoinFull(spark: SparkSession, sfDir: String,
-      numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    def side(tpe: String) = Tables.events(spark, sfDir)
-      .filter(col("event_type") === tpe)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us")
-    val clickDf = side("click")
-    val purchDf = side("purchase")
-    val base = ckptDir("graft_stream_fojoin_feed")
-    val cFeed = stageTimeChunksCached(clickDf, "us", numChunks, s"$base/clicks", s"fojoin-clicks|$sfDir|$numChunks")
-    val pFeed = stageTimeChunksCached(purchDf, "us", numChunks, s"$base/purchases", s"fojoin-purchases|$sfDir|$numChunks")
-    val name = "graft_stream_fojoin"
-    try {
-      // NULL-safe per side: either side may legitimately be empty (a round
-      // with no clicks); only both-empty aborts. Read from the feeds'
-      // staging pass — no extra jobs.
-      val maxUs = maxUsOrFail("streamingJoinFull", cFeed, pFeed)
-      val hourUs = 3600L * 1000000L
-      // Pre-staged per-side sentinels ([[stageSentinel]]): renamed in with
-      // the last chunk so chunk + flush share ONE micro-batch listing.
-      def sentinel(userId: Long, dir: String) = stageSentinelCached(
-        Seq((userId, -1L, maxUs + 2L * hourUs)).toDF("user_id", "event_id", "us"), dir,
-        s"fojoin-sent|$sfDir|$userId")
-      val cSent = sentinel(-1L, s"$base/sent_c")
-      val pSent = sentinel(-2L, s"$base/sent_p")
-      val clicks = spark.readStream.schema(clickDf.schema).parquet(cFeed.watchDir)
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          timestamp_micros(col("us")).as("c_time"))
-        .withWatermark("c_time", "0 seconds")
-      val purchases = spark.readStream.schema(purchDf.schema).parquet(pFeed.watchDir)
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          timestamp_micros(col("us")).as("p_time"))
-        .withWatermark("p_time", "0 seconds")
-      val joined = purchases.join(clicks, expr(
-          "p_user = c_user AND c_time >= p_time - INTERVAL 1 HOUR AND c_time <= p_time"),
-          "fullOuter")
-        .select(col("purchase_id"),
-          coalesce(col("p_user"), col("c_user")).as("user_id"), col("click_id"))
-      withJoinStoreV3(spark) { withStateParts(spark) {
-        val q = joined.writeStream.outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckptDir(name)).start()
-        try {
-          (0 until numChunks).foreach { k =>
-            dropChunk(cFeed, k); dropChunk(pFeed, k)
-            if (k == numChunks - 1) { // fold the watermark flush into the last batch
-              dropFiles(cFeed.watchDir, "sentinel", cSent)
-              dropFiles(pFeed.watchDir, "sentinel", pSent)
-            }
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } }
-    } finally rmTree(base) // feeds + sentinel staging share the base dir
-    // Sentinels surface only as unmatched outer rows carrying the
-    // event_id = -1 marker in their surviving side's id column (their
-    // far-future event times sit beyond every real join window, so they can
-    // never MATCH a real row). Filtering on the marker — not the user_id
-    // sign — keeps real negative/NULL-user rows and NULL-keyed outer rows,
-    // exactly what streamingJoinFullSql's oracle keeps (ADVICE r6).
-    spark.table(name).filter(
-      coalesce(col("purchase_id"), lit(0L)) =!= -1L &&
-      coalesce(col("click_id"), lit(0L)) =!= -1L)
-  }
+      numChunks: Int = 2): DataFrame =
+    clickPurchaseJoin(spark, sfDir, numChunks, "fojoin", "fullOuter")
 
   val streamingJoinFullSql: String =
     """SELECT p.purchase_id,
@@ -1450,29 +1219,22 @@ object StreamingOps {
   def streamingEnrich(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
     val purch = Tables.events(spark, sfDir).filter(col("event_type") === "purchase")
       .selectExpr("event_id", "user_id", "ts div 1000 AS us", "value")
-    val feed = stageTimeChunksCached(purch, "us", numChunks,
-      ckptDir("graft_stream_enrich_feed"), s"graft_stream_enrich_feed|$sfDir|$numChunks")
-    // The static side is materialized ONCE (r14, guide §2.1/§5): a
-    // stream-static join re-plans AND re-executes the static subtree every
-    // micro-batch, so without this the customer⋈nation join ran per batch
-    // (4× here). The checkpoint is the "cache the enrichment dim" posture a
-    // production ingest takes — per batch the dim side is a block scan.
-    val dims = Tables.customer(spark, sfDir)
-      .join(broadcast(Tables.nation(spark, sfDir)), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_name"), col("n_name"))
-      .localCheckpoint()
-    val enriched = spark.readStream.schema(purch.schema).parquet(feed.watchDir)
-      .join(dims, col("user_id") === col("c_custkey"))
-      .select(col("event_id"), col("user_id"), col("c_name"), col("n_name"), col("value"))
     val name = "graft_stream_enrich"
-    try withStateParts(spark) {
-      val q = enriched.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
-    spark.table(name)
+    drainToMemory(spark, name, "append", StateConf) { dir =>
+      val (feed, stream) = stageFeed(spark, name, sfDir, numChunks, dir, purch)
+      // The static side is materialized ONCE (r14, guide §2.1/§5): a
+      // stream-static join re-plans AND re-executes the static subtree every
+      // micro-batch, so without this the customer⋈nation join ran per batch
+      // (4× here). The checkpoint is the "cache the enrichment dim" posture a
+      // production ingest takes — per batch the dim side is a block scan.
+      val dims = Tables.customer(spark, sfDir)
+        .join(broadcast(Tables.nation(spark, sfDir)), col("c_nationkey") === col("n_nationkey"))
+        .select(col("c_custkey"), col("c_name"), col("n_name"))
+        .localCheckpoint()
+      Run(stream.join(dims, col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("c_name"), col("n_name"), col("value")),
+        Seq(feed))
+    }
   }
 
   val streamingEnrichSql: String =
@@ -1495,20 +1257,12 @@ object StreamingOps {
     * operator's semantics exactly. */
   def streamingDedup(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
     val docs = Tables.documents(spark, sfDir).selectExpr("doc_id", "text")
-    val feed = stageTimeChunksCached(docs, "doc_id", numChunks,
-      ckptDir("graft_stream_dedup_feed"), s"graft_stream_dedup_feed|$sfDir|$numChunks")
-    val deduped = spark.readStream.schema(docs.schema).parquet(feed.watchDir)
-      .select(md5(col("text")).as("content_hash"))
-      .dropDuplicates("content_hash")
     val name = "graft_stream_dedup"
-    try withStateParts(spark) {
-      val q = deduped.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
-    spark.table(name)
+    drainToMemory(spark, name, "append", StateConf) { dir =>
+      val (feed, stream) = stageFeed(spark, name, sfDir, numChunks, dir, docs, "doc_id")
+      Run(stream.select(md5(col("text")).as("content_hash")).dropDuplicates("content_hash"),
+        Seq(feed))
+    }
   }
 
   /** PRODUCTION-FORM streaming dedup: `dropDuplicatesWithinWatermark` over
@@ -1534,26 +1288,19 @@ object StreamingOps {
     // live keys and re-emits them, and the first symptom would be an
     // unexplained oracle hash-mismatch. Fail loudly at the source instead
     // if testdata ever outgrows the default. (One min/max agg — scalars.)
-    val span = evs.agg(min(col("us")), max(col("us"))).head
+    val span = evs.agg(min(col("us")), max(col("us"))).head()
     require(span.getLong(1) - span.getLong(0) < horizonDays * 86400L * 1000000L,
       s"events span exceeds the $horizon dedup horizon; the DISTINCT oracle " +
         "no longer models eviction-free behavior - widen horizonDays")
-    val feed = stageTimeChunksCached(evs, "us", numChunks,
-      ckptDir("graft_stream_dedup_wm_feed"), s"graft_stream_dedup_wm_feed|$sfDir|$numChunks")
-    val deduped = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-      .withColumn("event_time", timestamp_micros(col("us")))
-      .withWatermark("event_time", horizon)
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select(col("user_id"), col("event_type"))
     val name = "graft_stream_dedup_wm"
-    try withStateParts(spark) {
-      val q = deduped.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
-    spark.table(name)
+    drainToMemory(spark, name, "append", StateConf) { dir =>
+      val (feed, stream) = stageFeed(spark, name, sfDir, numChunks, dir, evs)
+      Run(stream
+        .withColumn("event_time", timestamp_micros(col("us")))
+        .withWatermark("event_time", horizon)
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .select(col("user_id"), col("event_type")), Seq(feed))
+    }
   }
 
   val streamingDedupWatermarkedSql: String =
@@ -1584,16 +1331,10 @@ object StreamingOps {
     val baseDir = ckptDir("graft_stream_upsert_snap")
     var currentVersion = -1L
     def snapPath(v: Long) = s"$baseDir/v$v"
-    def deleteDir(path: String): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
-    }
-    withStateParts(spark) {
+    val ckpt = ckptDir("graft_stream_upsert")
+    try withConf(spark, StateConf) {
       val q = stream.writeStream
-        .option("checkpointLocation", ckptDir("graft_stream_upsert"))
+        .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: Dataset[UpEv], batchId: Long) =>
           val w = Window.partitionBy(col("user_id"))
             .orderBy(col("us").desc, col("event_id").desc)
@@ -1623,11 +1364,11 @@ object StreamingOps {
           currentVersion = batchId
           // A/B swap: the new version is durable, so the old one (fully
           // read by the merge's write above) is garbage now.
-          if (superseded >= 0) deleteDir(snapPath(superseded))
+          if (superseded >= 0) graft.LocalDirs.deleteTree(snapPath(superseded))
         }
         .start()
       try feed(q) finally q.stop()
-    }
+    } finally graft.LocalDirs.deleteTree(ckpt)
     if (currentVersion < 0) // empty feed → no batch ever fired, no snapshot
       spark.range(0).selectExpr("id AS user_id", "id AS last_us",
         "CAST(id AS DOUBLE) AS last_value")
@@ -1646,14 +1387,14 @@ object StreamingOps {
     val purchases = Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    val feed = stageTimeChunksCached(purchases, "us", numChunks,
-      ckptDir("graft_stream_upsert_feed"), s"graft_stream_upsert_feed|$sfDir|$numChunks")
-    val stream = spark.readStream.schema(purchases.schema).parquet(feed.watchDir).as[UpEv]
+    val name = "graft_stream_upsert"
+    val dir = ckptDir(s"${name}_feed")
     // The snapshot lives in its own dir (and must survive — the returned
     // frame reads it lazily); only the feed copy is garbage, success or not.
-    try upsertRun(spark, stream) { q =>
-      (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-    } finally cleanupFeed(feed)
+    try {
+      val (feed, stream) = stageFeed(spark, name, sfDir, numChunks, dir, purchases)
+      upsertRun(spark, stream.as[UpEv])(drain(_, Seq(feed)))
+    } finally graft.LocalDirs.deleteTree(dir)
   }
 
   /** Spec-only harness of [[upsertRun]] over an explicit feed — crafted and

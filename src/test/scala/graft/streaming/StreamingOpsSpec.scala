@@ -28,10 +28,11 @@ class StreamingOpsSpec extends AnyFunSuite {
     val t0 = 1700000000L * 1000000L
     val gapUs = 30L * min
     val name = "graft_stream_sess_mb"
+    val ckpt = graft.LocalDirs.streamingCkpt(name)
     val source = MemoryStream[Ev]
     val q = StreamingOps.sessionizeStream(source.toDS(), gapUs)
       .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", graft.LocalDirs.streamingCkpt(name)).start()
+      .option("checkpointLocation", ckpt).start()
     def rows() = spark.table(name).as[SessionRow].collect().toSeq
       .sortBy(r => (r.user_id, r.session_id))
     try {
@@ -61,7 +62,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       assert(rows() === Seq(
         SessionRow(1, 1, 2, 10, 11, 3.75), SessionRow(1, 2, 1, 12, 12, 0.5),
         SessionRow(1, 3, 1, 13, 13, 1.0), SessionRow(2, 1, 1, 99, 99, 0.25)))
-    } finally q.stop()
+    } finally { q.stop(); graft.LocalDirs.deleteTree(ckpt) }
   }
 
   test("streaming dedup suppresses re-ingested duplicates across micro-batches") {
@@ -70,12 +71,13 @@ class StreamingOpsSpec extends AnyFunSuite {
     import StreamingOps.Doc
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val name = "graft_stream_dedup_mb"
+    val ckpt = graft.LocalDirs.streamingCkpt(name)
     val source = MemoryStream[Doc]
     val q = source.toDS()
       .select(org.apache.spark.sql.functions.md5($"text").as("content_hash"))
       .dropDuplicates("content_hash")
       .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", graft.LocalDirs.streamingCkpt(name)).start()
+      .option("checkpointLocation", ckpt).start()
     try {
       source.addData(Doc(1, "alpha"), Doc(2, "beta"), Doc(3, "alpha"))
       q.processAllAvailable()
@@ -83,7 +85,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       source.addData(Doc(4, "beta"), Doc(5, "gamma")) // cross-batch dup + new
       q.processAllAvailable()
       assert(spark.table(name).count() === 3)
-    } finally q.stop()
+    } finally { q.stop(); graft.LocalDirs.deleteTree(ckpt) }
   }
 
   test("watermarked dedup bounds state: expired hashes are evicted, in-horizon dups suppressed") {
@@ -92,6 +94,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val name = "graft_stream_dedup_wm"
+    val ckpt = graft.LocalDirs.streamingCkpt(name)
     // (event-time µs, text); 1-hour dedup horizon — the production form of
     // streamingDedup whose state does NOT grow with the corpus.
     val source = MemoryStream[(Long, String)]
@@ -101,7 +104,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .withWatermark("event_time", "1 hour")
       .dropDuplicatesWithinWatermark("content_hash")
       .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", graft.LocalDirs.streamingCkpt(name)).start()
+      .option("checkpointLocation", ckpt).start()
     val hr = 3600L * 1000000L
     try {
       // batch 1: two distinct docs + an in-batch dup; watermark → t=2h-1h=1h
@@ -118,7 +121,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       source.addData((11L * hr, "alpha"))
       q.processAllAvailable()
       assert(spark.table(name).count() === 4)
-    } finally q.stop()
+    } finally { q.stop(); graft.LocalDirs.deleteTree(ckpt) }
   }
 
   test("watermarked dedup (chunked feed, horizon > span) equals batch distinct keys") {
@@ -406,23 +409,25 @@ class StreamingOpsSpec extends AnyFunSuite {
       .writeStream.outputMode("complete").format("memory").queryName(qn)
       .option("checkpointLocation", ckpt).start()
 
-    clicks.filter(col("event_id") % 2 === 0).write.parquet(inDir)
-    val q1 = startQuery("graft_restart_run1")
-    try q1.processAllAvailable() finally q1.stop()
-    val afterChunk1 = counts("graft_restart_run1")
-    assert(afterChunk1.values.sum > 0)
+    try {
+      clicks.filter(col("event_id") % 2 === 0).write.parquet(inDir)
+      val q1 = startQuery("graft_restart_run1")
+      try q1.processAllAvailable() finally q1.stop()
+      val afterChunk1 = counts("graft_restart_run1")
+      assert(afterChunk1.values.sum > 0)
 
-    // New files arrive while the query is DOWN; the restart must pick up
-    // exactly these and merge onto the recovered state store.
-    clicks.filter(col("event_id") % 2 === 1).write.mode("append").parquet(inDir)
-    val q2 = startQuery("graft_restart_run2")
-    try q2.processAllAvailable() finally q2.stop()
-    val resumed = counts("graft_restart_run2")
+      // New files arrive while the query is DOWN; the restart must pick up
+      // exactly these and merge onto the recovered state store.
+      clicks.filter(col("event_id") % 2 === 1).write.mode("append").parquet(inDir)
+      val q2 = startQuery("graft_restart_run2")
+      try q2.processAllAvailable() finally q2.stop()
+      val resumed = counts("graft_restart_run2")
 
-    val batch = clicks.groupBy(col("user_id")).agg(count(lit(1)).as("n_clicks"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(resumed === batch)
-    assert(resumed !== afterChunk1) // chunk 2 really arrived after the stop
+      val batch = clicks.groupBy(col("user_id")).agg(count(lit(1)).as("n_clicks"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(resumed === batch)
+      assert(resumed !== afterChunk1) // chunk 2 really arrived after the stop
+    } finally graft.LocalDirs.deleteTree(base)
   }
 
   test("streaming KMV (chunked feed, watermark-fired windows) equals the batch min-k sketch") {
@@ -544,33 +549,82 @@ class StreamingOpsSpec extends AnyFunSuite {
     // failure mode a call site with an under-specified key would hit.
     val df1 = Seq((1L, 10L), (2L, 20L)).toDF("id", "us")
     val df2 = Seq((3L, 30L), (4L, 40L), (5L, 50L)).toDF("id", "us")
-    def runDir() =
-      s"${graft.LocalDirs.scratchRoot}/graft-io/feedspec-${java.util.UUID.randomUUID}"
+    val runDirs = scala.collection.mutable.ListBuffer.empty[String]
+    def runDir() = {
+      runDirs += s"${graft.LocalDirs.scratchRoot}/graft-io/feedspec-${java.util.UUID.randomUUID}"
+      runDirs.last
+    }
     def idsOf(feed: StreamingOps.ChunkFeed): Set[Long] =
       spark.read.parquet(feed.chunks.flatten.map(_.getAbsolutePath): _*)
         .select("id").collect().map(_.getLong(0)).toSet
-    val salt = java.util.UUID.randomUUID.toString // keys fresh per suite run
-    val fA = StreamingOps.stageTimeChunksCached(df1, "us", 2, runDir(), s"spec-$salt-A")
-    val fB = StreamingOps.stageTimeChunksCached(df2, "us", 2, runDir(), s"spec-$salt-B")
-    assert(idsOf(fA) === Set(1L, 2L), "key A must stage df1")
-    assert(idsOf(fB) === Set(3L, 4L, 5L), "distinct key B must stage df2, not reuse A")
-    // Colliding key, different frame: the master wins — replaying df1.
-    val fC = StreamingOps.stageTimeChunksCached(df2, "us", 2, runDir(), s"spec-$salt-A")
-    assert(idsOf(fC) === Set(1L, 2L),
-      "a colliding key must replay the first-staged master (the contract call sites must respect)")
-    // Per-run physical isolation: deleting run A's links must not disturb
-    // run C's view of the shared master (hardlinks, not shared paths).
-    fA.chunks.flatten.foreach(f => f.delete(): Unit)
-    assert(idsOf(fC) === Set(1L, 2L), "hardlinked runs must be physically independent")
-    // Sentinel cache: same contract.
-    val s1 = StreamingOps.stageSentinelCached(
-      Seq((-1L, 99L)).toDF("id", "us"), runDir(), s"spec-$salt-sent")
-    val s2 = StreamingOps.stageSentinelCached(
-      Seq((-2L, 77L)).toDF("id", "us"), runDir(), s"spec-$salt-sent")
-    def sentIds(fs: Seq[java.io.File]) =
-      spark.read.parquet(fs.map(_.getAbsolutePath): _*)
-        .select("id").collect().map(_.getLong(0)).toSet
-    assert(sentIds(s1) === Set(-1L))
-    assert(sentIds(s2) === Set(-1L), "colliding sentinel key must replay the master")
+    try {
+      val salt = java.util.UUID.randomUUID.toString // keys fresh per suite run
+      val fA = StreamingOps.stageTimeChunksCached(df1, "us", 2, runDir(), s"spec-$salt-A")
+      val fB = StreamingOps.stageTimeChunksCached(df2, "us", 2, runDir(), s"spec-$salt-B")
+      assert(idsOf(fA) === Set(1L, 2L), "key A must stage df1")
+      assert(idsOf(fB) === Set(3L, 4L, 5L), "distinct key B must stage df2, not reuse A")
+      // Colliding key, different frame: the master wins — replaying df1.
+      val fC = StreamingOps.stageTimeChunksCached(df2, "us", 2, runDir(), s"spec-$salt-A")
+      assert(idsOf(fC) === Set(1L, 2L),
+        "a colliding key must replay the first-staged master (the contract call sites must respect)")
+      // Per-run physical isolation: deleting run A's links must not disturb
+      // run C's view of the shared master (hardlinks, not shared paths).
+      fA.chunks.flatten.foreach(f => f.delete(): Unit)
+      assert(idsOf(fC) === Set(1L, 2L), "hardlinked runs must be physically independent")
+      // Sentinel cache: same contract.
+      val s1 = StreamingOps.stageSentinelCached(
+        Seq((-1L, 99L)).toDF("id", "us"), runDir(), s"spec-$salt-sent")
+      val s2 = StreamingOps.stageSentinelCached(
+        Seq((-2L, 77L)).toDF("id", "us"), runDir(), s"spec-$salt-sent")
+      def sentIds(fs: Seq[java.io.File]) =
+        spark.read.parquet(fs.map(_.getAbsolutePath): _*)
+          .select("id").collect().map(_.getLong(0)).toSet
+      assert(sentIds(s1) === Set(-1L))
+      assert(sentIds(s2) === Set(-1L), "colliding sentinel key must replay the master")
+    } finally runDirs.foreach(graft.LocalDirs.deleteTree)
+  }
+
+  // Every registered streaming query returns the session to where it found
+  // it: its checkpoint and feed dirs are gone, no stream is left running,
+  // and the session confs the run harness sets read as they did before.
+  private val StreamQueries =
+    graft.SparkEntry.queries.keys.filter(_.contains("_stream_")).toSeq.sorted
+
+  /** The confs the harness sets for some run, and restores. */
+  private val HarnessKeys = Seq(
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.streaming.join.stateFormatVersion",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+
+  private def ckptEntries(): Set[String] =
+    Option(new java.io.File(s"${graft.LocalDirs.scratchRoot}/graft-ckpt").list())
+      .fold(Set.empty[String])(_.toSet)
+
+  test("the registry has the 15 streaming queries the cleanup checks walk") {
+    assert(StreamQueries.size === 15, StreamQueries)
+  }
+
+  StreamQueries.foreach { q =>
+    test(s"$q leaves no checkpoint dir, active stream or changed session conf behind") {
+      val parts = spark.conf.get("spark.sql.shuffle.partitions")
+      // The test session already runs 4 partitions, the harness value; a
+      // different one shows whether the harness restores it.
+      spark.conf.set("spark.sql.shuffle.partitions", "7")
+      try {
+        val confBefore = HarnessKeys.map(k => k -> spark.conf.getOption(k))
+        val dirsBefore = ckptEntries()
+        graft.SparkEntry.queries(q)(spark, Sf).collect()
+        // Every harness dir is named after its sink (graft_stream_*). The
+        // upsert snapshot stays on purpose: the returned frame reads it.
+        val left = (ckptEntries() -- dirsBefore)
+          .filter(_.startsWith("graft_stream_"))
+          .filterNot(_.startsWith("graft_stream_upsert_snap-"))
+        assert(left.isEmpty, s"$q left checkpoint dirs behind")
+        assert(spark.streams.active.isEmpty, s"$q left a stream running")
+        assert(HarnessKeys.map(k => k -> spark.conf.getOption(k)) === confBefore)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
+    }
   }
 }
